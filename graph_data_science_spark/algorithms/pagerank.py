@@ -26,8 +26,8 @@ global L2 normalization (the masterCompute analog is a driver-side agg).
 
 from __future__ import annotations
 
+import math
 import os
-
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation
@@ -44,6 +44,16 @@ from graph_data_science_spark.pregel.superstep import (
     edge_lineage,
     free_checkpointed,
 )
+
+
+# Delta-state bytes per row for the memory prediction and the fold budget.
+STATE_ROW_BYTES = 32
+# Share of executor memory the retained (not yet folded) delta frames may
+# take before _rank_loop folds them early. At a 12g heap (~7.4 GB
+# executor memory) this is ~29M retained rows — 10M-row frames fold every
+# 3 commits, 20M-row frames every 2; at 16g, every 4 and every 2. That
+# keeps the 10-20M-row regime of BASELINE.md at ≤ 4 retained frames.
+FOLD_MEMORY_FRACTION = 0.125
 
 
 @dataclass
@@ -127,14 +137,16 @@ def _rank_loop(
             norm_edges, n, num_blocks=num_blocks, hot_degree_threshold=hot_degree_threshold
         )
         msg_fn = lambda active: spmv_messages(blocked, active)  # noqa: E731
+        num_parts = None  # the cogroup re-keys state by block; no co-partitioning
     else:
         # norm_edges came out of the window normalization already
         # hash-partitioned by src at num_blocks — skip the re-exchange.
         prepped, msg_fn = sql_message_path(
             norm_edges, num_blocks, hot_degree_threshold, clustered=norm_clustered
         )
+        num_parts = prepped.rdd.getNumPartitions()
     # auto_free_prev=False: committed delta frames are retained in `pending`
-    # until the next fold — _fold() frees them once summed.
+    # until they are folded — _fold() frees them once summed.
     loop = SuperstepLoop(
         spark,
         name,
@@ -154,8 +166,10 @@ def _rank_loop(
     )
     # Pre-loop memory prediction (reference DefaultMemoryGuard analog):
     # delta state is one (node, delta) row per active vertex, 16B data +
-    # row overhead.
-    loop.predict(node_count=n, state_row_bytes=32)
+    # row overhead. The same figures size the fold budget below.
+    pred = loop.predict(node_count=n, state_row_bytes=STATE_ROW_BYTES)
+    avail_mb = pred.get("executor_memory_mb")
+    fold_rows = FOLD_MEMORY_FRACTION * avail_mb * 1e6 / STATE_ROW_BYTES if avail_mb else math.inf
 
     # Delta-only superstep loop. The classical formulation keeps a full
     # (node, rank, delta) state and outer-joins messages into it every
@@ -163,23 +177,30 @@ def _rank_loop(
     # active set has shrunk to a handful of vertices. Since
     #     rank(v) = Σ_t delta_t(v)   (delta_0 = the init value),
     # the loop only ever needs the *delta* frame — which is exactly the
-    # active set — and ranks are a single fold at the end. Deltas are folded
-    # into a running partial sum every ``fold_every`` supersteps so retained
-    # state stays bounded. Measured 3× faster per superstep at 15M edges.
-    # fold_every=4 (was 8): at 10-20M active rows the retained
-    # localCheckpoint frames start evicting/competing with shuffle memory
-    # around 5 pending frames — per-superstep walls climbed 2-3× by
-    # superstep 6-8 with fold_every=8 and stay flat at 4 (A/B, 10M-edge
-    # cycle graph, local[8]; see BENCH r3 notes).
+    # active set — and ranks are a single fold at the end. Committed delta
+    # frames are retained until then; each commit's Observation counts the
+    # frame's rows (no extra job), and the loop folds early only when the
+    # retained rows × STATE_ROW_BYTES exceed FOLD_MEMORY_FRACTION of
+    # executor memory. Retained localCheckpoint frames compete with
+    # shuffle memory: at 10-20M active rows, 5 retained frames inflated
+    # late supersteps 2-3× (A/B, 10M-edge cycle graph, local[8]; see
+    # BASELINE.md) — the budget folds that regime at least every 4 frames,
+    # while graphs whose deltas fit the budget pay one fold per run.
     alpha = 1.0 - damping
-    fold_every = int(os.environ.get("SPARK_GRAFT_FOLD_EVERY", "4"))
     spark_ = spark
+
+    def _by_node(df: DataFrame) -> DataFrame:
+        # Vertex state co-partitioned with the edge cache (see spmv.py);
+        # Spark drops the exchange when df already has this partitioning.
+        return df.repartition(num_parts, "node") if num_parts else df
 
     def _fold(running: DataFrame | None, frames: list[DataFrame]) -> DataFrame:
         parts = ([running] if running is not None else []) + frames
         out = parts[0].select("node", "delta")
         for p in parts[1:]:
             out = out.union(p.select("node", "delta"))
+        # In-memory commits are co-partitioned with the edge cache: the
+        # union keeps that partitioning and the sum needs no exchange.
         out = out.groupBy("node").agg(F.sum("delta").alias("delta"))
         if loop.state_level is not None:
             out = out.localCheckpoint(eager=True, storageLevel=loop.state_level)
@@ -189,16 +210,17 @@ def _rank_loop(
             free_checkpointed(p)
         return out
 
+    def _counted(df: DataFrame, obs: Observation, *extra) -> DataFrame:
+        return df.observe(obs, F.count(F.lit(1)).alias("rows"), *extra)
+
     resumed = loop.resume()
     if resumed is not None:
         # Committed state_i frames are per-superstep deltas; refold them.
-        import os as _os
-
         last = resumed[1]
         frames = [
             spark_.read.parquet(loop._state_path(i))
             for i in range(0, last + 1)
-            if _os.path.exists(loop._marker(i))
+            if os.path.exists(loop._marker(i))
         ]
         if initial_scores is not None:
             # Warm-start runs fold the previous solution in as delta_(-1)
@@ -212,15 +234,17 @@ def _rank_loop(
                     F.col("node_id").alias("node"), F.col("score").cast("double").alias("delta")
                 ),
             )
-        running = _fold(None, frames)
+        running = _fold(None, [_by_node(f.select("node", "delta")) for f in frames])
         delta = frames[-1]
         if "_s" in delta.columns:
             # Fused commits union several rounds; only the last round's
             # rows are the live active set.
             last_s = delta.agg(F.max("_s").alias("m")).collect()[0]["m"]
             delta = delta.filter(F.col("_s") == last_s).select("node", "delta")
+        delta = _by_node(delta)
         start = last + 1
-        pending_init: list[DataFrame] = []  # all committed deltas already folded
+        pending: list[DataFrame] = []  # all committed deltas already folded
+        pending_rows: list[int] = []
     else:
         nodes = graph.node_ids().select(F.col("node_id").alias("node"))
         if source_nodes is not None:
@@ -240,8 +264,10 @@ def _rank_loop(
             # (scores can DROP when a node's in-neighbor gains
             # out-degree), which is why every tolerance gate below is on
             # |delta| — equivalent for the all-positive cold start.
-            prev = initial_scores.select(
-                F.col("node_id").alias("node"), F.col("score").cast("double").alias("prev")
+            prev = _by_node(
+                initial_scores.select(
+                    F.col("node_id").alias("node"), F.col("score").cast("double").alias("prev")
+                )
             )
             contrib = msg_fn(prev.select("node", F.col("prev").alias("msg_val"))).select(
                 F.col("dst").alias("node"), (F.lit(damping) * F.col("msg")).alias("c")
@@ -263,9 +289,11 @@ def _rank_loop(
         else:
             delta = nodes.select("node", init.alias("delta")).filter(F.col("delta") != 0.0)
             running = None
-        delta = loop.commit(delta, 0, {"active": -1})
+        obs0 = Observation()
+        delta = loop.commit(_counted(_by_node(delta), obs0), 0, {"active": -1}, observation=obs0)
         start = 1
-        pending_init = [delta]
+        pending = [delta]
+        pending_rows = [int(obs0.get.get("rows") or 0)]
 
     # GDS superstep accounting (Pregel.java:204-242): superstep 0 is
     # init+send, supersteps 1..maxIterations-1 are update rounds — so
@@ -275,7 +303,6 @@ def _rank_loop(
     loop_t0 = _time.monotonic()
     updates = 0
     walls: list[float] = []
-    pending: list[DataFrame] = pending_init
     converged = False
     it = start - 1
     while it + 1 < max_iterations:
@@ -290,21 +317,24 @@ def _rank_loop(
         # deduplicated by Spark's exchange reuse. Cuts the fixed
         # job-launch/commit overhead per superstep by the fusion factor.
         rounds = min(fuse, max_iterations - (it + 1))
-        cur = delta.filter(F.abs("delta") > tolerance).select("node", "delta")
+        # Few DataFrame calls per round: each one is a driver-side analysis
+        # pass (~5-15 ms), paid every superstep.
+        cur = delta
         frames = []
         for r in range(rounds):
-            msgs = msg_fn(cur.select("node", F.col("delta").alias("msg_val")))
-            nd = msgs.select(
-                F.col("dst").alias("node"), (F.lit(damping) * F.col("msg")).alias("delta")
+            active = cur.filter(F.abs("delta") > tolerance)
+            cur = msg_fn(active.select("node", F.col("delta").alias("msg_val"))).select(
+                F.col("dst").alias("node"),
+                (F.lit(damping) * F.col("msg")).alias("delta"),
+                F.lit(r).alias("_s"),
             )
-            frames.append(nd.select("node", "delta", F.lit(r).alias("_s")))
-            if r + 1 < rounds:
-                cur = nd.filter(F.abs("delta") > tolerance).select("node", "delta")
+            frames.append(cur)
         fused = frames[0]
         for fr in frames[1:]:
             fused = fused.union(fr)
         obs = Observation()
-        fused = fused.observe(
+        fused = _counted(
+            fused,
             obs,
             F.sum(
                 F.when((F.col("_s") == rounds - 1) & (F.abs("delta") > tolerance), 1).otherwise(0)
@@ -312,16 +342,17 @@ def _rank_loop(
         )
         it += rounds
         committed = loop.commit(fused, it, {}, observation=obs)
-        delta = committed.filter(F.col("_s") == rounds - 1).select("node", "delta")
+        delta = committed if rounds == 1 else committed.filter(F.col("_s") == rounds - 1)
         pending.append(committed)
+        pending_rows.append(int(obs.get.get("rows") or 0))
         updates += rounds
         wall = _time.monotonic() - it_t0
         walls.extend([wall / rounds] * rounds)
-        if len(pending) >= fold_every:
+        if sum(pending_rows) > fold_rows and len(pending) > 1:
             # Keep the newest frame out of the fold: _fold frees what it
             # sums, and `delta` still derives from it for the next round.
             running = _fold(running, pending[:-1])
-            pending = [pending[-1]]
+            pending, pending_rows = pending[-1:], pending_rows[-1:]
         if not (obs.get.get("active") or 0):
             converged = True
             break

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from graph_data_science_spark.pregel.superstep import free_checkpointed
+
 DEFAULT_BUCKETS = 256  # floor; see bucket_count_for()
 
 # Target rows per in-bucket sort task. Each bucket's row_number() window
@@ -58,19 +60,48 @@ def dense_ids(df: DataFrame, key_cols: list[str], num_buckets: int | None = None
     """Return ``df.select(key_cols).distinct()`` + a dense ``node_id`` column
     in [0, n) — a deterministic bijection of the key set.
 
-    ``num_buckets=None`` derives the count from the key count via
-    ``bucket_count_for`` (one extra count() action). Pass an explicit,
-    recorded value to reproduce a previously-built id map bit-for-bit.
-    """
-    keys = df.select(*key_cols).distinct()
-    if num_buckets is None:
-        num_buckets = bucket_count_for(keys.count())
-    with_pid = keys.withColumn(
-        "_pid", F.pmod(F.xxhash64(*key_cols), F.lit(num_buckets)).cast("int")
-    )
+    The map is materialized once (``localCheckpoint``): callers join it
+    against their data several times (edge derivation, result join-back),
+    and a lazy map would rerun the distinct + window for every use. The
+    checkpoint is reclaimed by Spark's ContextCleaner once the returned
+    frame (and every frame derived from it) is garbage collected. The key
+    count ``n`` is summed from the per-bucket counts this function collects
+    anyway and is attached to the returned frame as ``key_count`` — read it
+    instead of running a ``count()``.
 
-    # Tiny collect: one row per bucket.
-    counts = {r["_pid"]: r["cnt"] for r in with_pid.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
+    ``num_buckets=None`` derives the count from the key count via
+    ``bucket_count_for``. Pass an explicit, recorded value to reproduce a
+    previously-built id map bit-for-bit.
+    """
+    # Fresh attribute ids (the aliases): the checkpoint must not share the
+    # key attributes of `df`, or joining the map back onto `df` — what every
+    # caller does — fails Spark's self-join deduplication.
+    keys = df.select(*[F.col(c).alias(c) for c in key_cols]).distinct()
+    # bucket_count_for() is DEFAULT_BUCKETS for every key set up to
+    # DEFAULT_BUCKETS × ROWS_PER_BUCKET keys, so rank with that count first
+    # and re-rank only when the key count turns out to need more buckets.
+    buckets = num_buckets or DEFAULT_BUCKETS
+    while True:
+        ranked = (
+            keys.withColumn("_pid", F.pmod(F.xxhash64(*key_cols), F.lit(buckets)).cast("int"))
+            .withColumn(
+                "_rank",
+                F.row_number().over(Window.partitionBy("_pid").orderBy(*key_cols)) - F.lit(1),
+            )
+            .localCheckpoint(eager=True)
+        )
+        # Tiny collect: one row per bucket. `ranked` is already clustered by
+        # _pid (the window's exchange), so this is a single-stage scan.
+        counts = {
+            r["_pid"]: r["cnt"]
+            for r in ranked.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
+        }
+        n = sum(counts.values())
+        if num_buckets is not None or bucket_count_for(n) == buckets:
+            break
+        free_checkpointed(ranked)
+        buckets = bucket_count_for(n)
+
     offsets, acc = {}, 0
     for pid in sorted(counts):
         offsets[pid] = acc
@@ -84,9 +115,6 @@ def dense_ids(df: DataFrame, key_cols: list[str], num_buckets: int | None = None
         F.col("_pid"),
     ) if offsets else F.lit(0)
 
-    w = Window.partitionBy("_pid").orderBy(*key_cols)
-    return (
-        with_pid.withColumn("_rank", F.row_number().over(w) - F.lit(1))
-        .withColumn("node_id", (F.col("_rank") + offset_col).cast("long"))
-        .drop("_pid", "_rank")
-    )
+    out = ranked.select(*key_cols, (F.col("_rank") + offset_col).cast("long").alias("node_id"))
+    out.key_count = n
+    return out

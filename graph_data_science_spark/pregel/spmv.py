@@ -140,15 +140,18 @@ def prep_edges_sql(
     clustered: bool = False,
 ) -> DataFrame:
     """One-time prep for the JVM-side message path: hash-partition the edge
-    table by src, SORT within partitions by src, and cache it.
+    table by src, sort within partitions by src, and cache it.
 
-    The sort is the load-bearing part for superstep cost: the per-round
-    state join plans as a SortMergeJoin, and a cached relation advertises
-    its outputPartitioning AND outputOrdering — so a pre-sorted cache
-    satisfies both SMJ requirements and every superstep skips the
-    exchange *and* the O(|E| log |E|) sort on the edge side; only the
-    (much smaller) vertex state is exchanged + sorted per round. Unsorted,
-    Spark re-sorts the full edge table every superstep.
+    The cache is the edge half of a co-partitioned vertex/edge layout
+    (GraphX's edge partitions, Gonzalez et al., OSDI 2014): the vertex
+    state of a superstep is hash-partitioned on ``node`` into the same
+    ``num_partitions``, so the per-round state join (see
+    :func:`spmv_messages_sql`) reads both inputs in place — no exchange and
+    no sort on either side — and only the messages move. A cached relation
+    advertises its outputPartitioning and outputOrdering, which is what
+    lets the planner skip the exchange. The src sort serves the other
+    loops over this cache (``salted_gather_join``) when their join plans as
+    a sort-merge join, which then skips the edge-side sort too;
     ``SPARK_GRAFT_SORT_EDGES=0`` restores the unsorted cache (A/B knob).
 
     ``clustered=True``: the caller guarantees ``edges`` is ALREADY
@@ -171,26 +174,56 @@ def prep_edges_sql(
     return prepped
 
 
+def _sum_messages(prepped_edges: DataFrame, joined: DataFrame) -> DataFrame:
+    """``groupBy(dst).sum(_v * norm_w)`` whose output is hash-partitioned on
+    ``dst`` into the edge cache's partition count — so the committed state
+    it becomes lines up with the cache in the next superstep's join.
+
+    The aggregate's own exchange uses ``spark.sql.shuffle.partitions``.
+    When the cache was built with another count (``num_blocks``), the
+    joined rows are shuffled by ``dst`` into the cache's count first and
+    the aggregate needs no exchange of its own: still one exchange per
+    superstep, at the price of the map-side partial sum."""
+    parts = prepped_edges.rdd.getNumPartitions()
+    if parts != int(joined.sparkSession.conf.get("spark.sql.shuffle.partitions")):
+        joined = joined.repartition(parts, "dst")
+    return joined.groupBy("dst").agg(F.sum(F.col("_v") * F.col("norm_w")).alias("msg"))
+
+
 def spmv_messages_sql(prepped_edges: DataFrame, state: DataFrame, value_col: str = "msg_val") -> DataFrame:
     """JVM-only gather-scatter for *reducible* messages (Pregel Reducer.Sum
     analog): one co-partitioned join + one partial+final hash aggregation,
     whole-stage codegen end to end — no Python in the superstep at all.
 
-    Measured on a 3.8M-edge transcript graph this is ~8× faster per
+    Plan: ``state`` arrives hash-partitioned on ``node`` into the edge
+    cache's partition count (the previous superstep's message aggregate,
+    see :func:`_sum_messages`, or the loop's superstep-0 repartition), so
+    the ``shuffle_hash`` join builds a per-partition hash table of the
+    active state and streams the cached edges past it: no exchange and no
+    sort below the join. The only exchange of a superstep is the message
+    aggregation's, and the whole superstep is one Spark job (superstep
+    commits run with AQE off, see ``SuperstepLoop.commit``).
+
+    The hint is load-bearing. Without it, any edge cache under
+    ``spark.sql.autoBroadcastJoinThreshold`` (64 MB in ``session.py`` —
+    millions of edges) plans as a BroadcastHashJoin that builds on the
+    EDGE side: every superstep first runs an extra job that collects the
+    whole cached edge table to the driver and re-broadcasts it, which on
+    small and mid-size graphs costs more than the superstep itself. A
+    sort-merge join would also keep the edges in place, but sorts the
+    state every round; the hash join needs no sort on either side.
+
+    Measured on a 3.8M-edge transcript graph this path is ~8× faster per
     superstep than the Arrow/CSR path, because the cogroup must ship the
     entire edge side across the JVM↔Python Arrow boundary every superstep
     (~40 MB/s effective) while this path touches edges only inside
-    whole-stage codegen. Network-wise the two are equivalent on a cluster
-    (edges stay cached-partitioned; only state + messages shuffle) — the
-    Arrow/CSR path earns its keep solely for kernels Catalyst can't express
-    (array-valued vertex states, custom per-vertex compute like FastRP).
+    whole-stage codegen. The Arrow/CSR path earns its keep solely for
+    kernels Catalyst can't express (array-valued vertex states, custom
+    per-vertex compute like FastRP).
     """
     st = state.select(F.col("node"), F.col(value_col).cast("double").alias("_v"))
-    return (
-        prepped_edges.join(st, prepped_edges["src"] == st["node"], "inner")
-        .groupBy("dst")
-        .agg(F.sum(F.col("_v") * F.col("norm_w")).alias("msg"))
-    )
+    joined = prepped_edges.join(st.hint("shuffle_hash"), prepped_edges["src"] == st["node"], "inner")
+    return _sum_messages(prepped_edges, joined)
 
 
 def spmv_messages_arrays(
@@ -357,9 +390,10 @@ def prep_edges_sql_salted(
     ``salt = pmod(xxhash64(spread), nsalt)`` for hot keys (0 otherwise) —
     the same other-endpoint-hash sub-grouping as the Arrow path's
     ``build_blocks``. The result is hash-partitioned AND sorted on
-    ``(key, salt)`` and cached, so every superstep's SortMergeJoin still
-    reads the edge side exchange-free and sort-free; only the (small)
-    state side is exchanged per round, exactly as in the unsalted plan.
+    ``(key, salt)`` and cached, so every superstep's join still reads the
+    edge side exchange-free and sort-free; only the (small) replicated
+    state side is exchanged per round (the unsalted plan keeps the state
+    co-partitioned and exchanges nothing below the join).
     Skewed graphs pay ONE extra full-edge shuffle at build time and get
     flat superstep task histograms in return.
     """
@@ -486,17 +520,17 @@ def spmv_messages_sql_salted(
     everything else), then joined on ``(src, salt)``. The per-partition
     partial aggregation and the final ``groupBy(dst)`` combine are
     unchanged — a hot source's gather work is now ``nsalt`` parallel tasks
-    instead of one straggler.
+    instead of one straggler. The replicated state is exchanged on
+    ``(node, salt)`` every round (it cannot share the ``(src, salt)``
+    clustering of the cache ahead of time), but the same ``shuffle_hash``
+    hint keeps the cached edges in place instead of broadcasting them.
     """
     st = replicate_state_for_salts(
         state.select(F.col("node"), F.col(value_col).cast("double").alias("_v")), hot
+    ).hint("shuffle_hash")
+    joined = prepped_salted.join(
+        st,
+        (prepped_salted["src"] == st["node"]) & (prepped_salted["salt"] == st["salt"]),
+        "inner",
     )
-    return (
-        prepped_salted.join(
-            st,
-            (prepped_salted["src"] == st["node"]) & (prepped_salted["salt"] == st["salt"]),
-            "inner",
-        )
-        .groupBy("dst")
-        .agg(F.sum(F.col("_v") * F.col("norm_w")).alias("msg"))
-    )
+    return _sum_messages(prepped_salted, joined)

@@ -17,6 +17,23 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_heap() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: 16g, capped at
+    a quarter of physical memory. The heap is pre-touched (-Xms = -Xmx,
+    see below), so a heap larger than the box stops the JVM from starting
+    at all."""
+    cap_mb = 16 * 1024
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    cap_mb = min(cap_mb, int(line.split()[1]) // 1024 // 4)
+                    break
+    except OSError:
+        pass
+    return f"{cap_mb}m"
+
+
 def get_spark(
     app_name: str = "spark-link-graph",
     master: str | None = None,
@@ -78,7 +95,7 @@ def get_spark(
     # - -Xms = -Xmx + AlwaysPreTouch: heap growth was causing page-fault
     #   storms (high sys-time phases, 3 s→38 s per-superstep variance);
     #   pre-touching makes superstep times settle to a flat ~1.6 s.
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_heap()
     jvm_opts = (
         f"-Xms{mem} -XX:+AlwaysPreTouch -XX:G1HeapRegionSize=32m "
         "-XX:MaxGCPauseMillis=200 -XX:+ParallelRefProcEnabled"

@@ -90,36 +90,49 @@ def derive_link_graph(
     Weight = link multiplicity (GDS Aggregation.COUNT analog) when
     ``weight_by_multiplicity`` else 1.0.
     """
-    spark = transcripts.sparkSession
+    # Each id map is materialized once by dense_ids (and reused by the edge
+    # plan below and by join_scores_back); its key count comes with it.
+    turn_ids = dense_ids(transcripts.select("conv_id", "turn_idx"), ["conv_id", "turn_idx"])
+    n_turns = turn_ids.key_count
 
-    turn_keys = transcripts.select("conv_id", "turn_idx")
-    turn_ids = dense_ids(turn_keys, ["conv_id", "turn_idx"])
-    n_turns = turn_ids.count()
+    tool_map = dense_ids(transcripts.filter(F.col("tool").isNotNull()).select("tool"), ["tool"])
+    n_tools = tool_map.key_count
+    tool_ids = tool_map.withColumn("node_id", F.col("node_id") + F.lit(n_turns))
 
-    tool_keys = transcripts.filter(F.col("tool").isNotNull()).select("tool")
-    tool_ids = dense_ids(tool_keys, ["tool"]).withColumn(
-        "node_id", F.col("node_id") + F.lit(n_turns)
+    # Distinct id column names per map, so the tool join selects both ids by
+    # name rather than through DataFrame column references (which Spark's
+    # ambiguous self-join check inspects).
+    with_ids = transcripts.join(
+        turn_ids.withColumnRenamed("node_id", "turn_node"), ["conv_id", "turn_idx"]
     )
-    n_tools = tool_ids.count()
-
-    with_ids = transcripts.join(turn_ids, ["conv_id", "turn_idx"])
     wl = Window.partitionBy("conv_id").orderBy("turn_idx")
     reply = (
-        with_ids.withColumn("nxt", F.lead("node_id").over(wl))
+        with_ids.withColumn("nxt", F.lead("turn_node").over(wl))
         .filter(F.col("nxt").isNotNull())
-        .select(F.col("node_id").alias("src"), F.col("nxt").alias("dst"))
+        .select(F.col("turn_node").alias("src"), F.col("nxt").alias("dst"))
     )
     edges = reply
     if include_tool_edges:
         tool_e = (
             with_ids.filter(F.col("tool").isNotNull())
-            .join(tool_ids, "tool")
-            .select(with_ids["node_id"].alias("src"), tool_ids["node_id"].alias("dst"))
+            .join(tool_ids.withColumnRenamed("node_id", "tool_node"), "tool")
+            .select(F.col("turn_node").alias("src"), F.col("tool_node").alias("dst"))
         )
         edges = edges.union(tool_e)
 
     if weight_by_multiplicity:
-        edges = edges.groupBy("src", "dst").agg(F.count("*").cast("double").alias("weight"))
+        # Shuffle by src alone, into the session's partition count: the
+        # multiplicity count needs no exchange of its own, and the edges
+        # arrive clustered the way the SQL message path caches them (see
+        # pregel.spmv.prep_edges_sql), so a default-partitioned graph build
+        # is one edge shuffle, not two. Derived links are almost always
+        # unique, so the map-side partial count this gives up saved nothing.
+        parts = int(transcripts.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        edges = (
+            edges.repartition(parts, "src")
+            .groupBy("src", "dst")
+            .agg(F.count("*").cast("double").alias("weight"))
+        )
     else:
         edges = edges.select("src", "dst", F.lit(1.0).alias("weight"))
 

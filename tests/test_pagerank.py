@@ -124,3 +124,96 @@ def test_pagerank_fused_resume(spark, tmp_path):
     b = scores_list(full, 11)
     for x, y in zip(a, b):
         assert x == pytest.approx(y, abs=1e-9)
+
+
+# Score equivalence of the co-partitioned superstep layout and the fold
+# budget: every variant must reproduce the plain run's scores. Twelve
+# supersteps keep every delta frame non-trivial (F1 converges slowly).
+F1_TOL = dict(tolerance=1e-6, max_iterations=12)
+
+
+def _assert_same(got, want, atol):
+    for i, (a, b) in enumerate(zip(got, want)):
+        assert a == pytest.approx(b, abs=atol), f"node {i}: {a} != {b}"
+
+
+@pytest.fixture(scope="module")
+def f1_plain(spark):
+    g = from_edge_list(spark, F1_EDGES, node_count=11)
+    return scores_list(pagerank(g, **F1_TOL), 11)
+
+
+def test_pagerank_fold_budget_does_not_change_scores(spark, monkeypatch, f1_plain):
+    import importlib
+
+    pr_mod = importlib.import_module("graph_data_science_spark.algorithms.pagerank")
+
+    checkpoints = []
+    df_class = type(spark.range(1))
+    local_checkpoint = df_class.localCheckpoint
+
+    def counting(self, *args, **kwargs):
+        checkpoints.append(1)
+        return local_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(df_class, "localCheckpoint", counting)
+    g = from_edge_list(spark, F1_EDGES, node_count=11)
+    end_only = pagerank(g, **F1_TOL)
+    end_only_checkpoints = len(checkpoints)
+    # A budget of a fraction of a row: every commit folds the frames before it.
+    monkeypatch.setattr(pr_mod, "FOLD_MEMORY_FRACTION", 1e-12)
+    checkpoints.clear()
+    folded = pagerank(g, **F1_TOL)
+    assert len(checkpoints) > end_only_checkpoints  # the early folds ran
+    assert folded.ran_iterations == end_only.ran_iterations
+    _assert_same(scores_list(folded, 11), scores_list(end_only, 11), 1e-12)
+    _assert_same(scores_list(end_only, 11), f1_plain, 1e-12)
+
+
+def test_pagerank_num_blocks_differs_from_shuffle_partitions(spark, f1_plain):
+    assert spark.conf.get("spark.sql.shuffle.partitions") != "3"
+    g = from_edge_list(spark, F1_EDGES, node_count=11)
+    _assert_same(scores_list(pagerank(g, num_blocks=3, **F1_TOL), 11), f1_plain, 1e-12)
+
+
+def test_pagerank_salted_hot_source(spark, f1_plain):
+    # Node 4 has out-degree 3 > threshold 2: its out-edges are salted into
+    # two sub-groups and its state is replicated to both.
+    g = from_edge_list(spark, F1_EDGES, node_count=11)
+    for num_blocks in (None, 3):
+        res = pagerank(g, hot_degree_threshold=2, num_blocks=num_blocks, **F1_TOL)
+        _assert_same(scores_list(res, 11), f1_plain, 1e-12)
+
+
+def test_pagerank_fused_with_num_blocks(spark, f1_plain):
+    g = from_edge_list(spark, F1_EDGES, node_count=11)
+    res = pagerank(g, fuse=3, num_blocks=3, **F1_TOL)
+    _assert_same(scores_list(res, 11), f1_plain, 1e-12)
+
+
+def test_pagerank_warm_start_from_converged_scores(spark):
+    # A DAG: every delta dies out after its depth, so the cold run converges
+    # in a few supersteps and the warm runs have nothing left to push.
+    dag = [(0, 2), (1, 2), (1, 3), (2, 4), (3, 4), (4, 5), (6, 5), (6, 3)]
+    g = from_edge_list(spark, dag, node_count=7)
+    cold = pagerank(g, tolerance=1e-10, max_iterations=20)
+    assert cold.did_converge
+    warm = [
+        pagerank(g, initial_scores=cold.scores, num_blocks=num_blocks, **F1_TOL)
+        for num_blocks in (None, 3)
+    ]
+    for w in warm:
+        assert w.did_converge and w.updates_run <= 1
+        _assert_same(scores_list(w, 7), scores_list(cold, 7), 1e-12)
+
+
+def test_pagerank_kill_resume_matches_uninterrupted(spark, tmp_path, f1_plain):
+    # The resumed superstep-0 frame is read back from parquet and must be
+    # re-partitioned into the edge cache's count (3 ≠ shuffle partitions).
+    g = from_edge_list(spark, F1_EDGES, node_count=11)
+    ck = str(tmp_path / "ck")
+    partial = pagerank(g, tolerance=1e-6, max_iterations=5, checkpoint_dir=ck, num_blocks=3)
+    assert partial.ran_iterations == 5
+    resumed = pagerank(g, checkpoint_dir=ck, num_blocks=3, **F1_TOL)
+    assert resumed.updates_run == F1_TOL["max_iterations"] - 5
+    _assert_same(scores_list(resumed, 11), f1_plain, 1e-12)

@@ -6,13 +6,15 @@ silently reintroduce an exchange or lose pushdown.
 import os
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from graph_data_science_spark.algorithms.pagerank import _normalized_edges  # noqa: E402
+from graph_data_science_spark.algorithms.pagerank import _normalized_edges, pagerank  # noqa: E402
 from graph_data_science_spark.graph.build import LinkGraph  # noqa: E402
 from graph_data_science_spark.pregel.spmv import prep_edges_sql  # noqa: E402
+from graph_data_science_spark.pregel.superstep import SuperstepLoop  # noqa: E402
 
 
 def _physical(df) -> str:
@@ -53,3 +55,42 @@ def test_small_dim_join_is_broadcast(spark):
     joined = big.join(dim, "dim_id")
     plan = _physical(joined)
     assert "BroadcastHashJoin" in plan, plan
+
+
+def _plan_nodes(plan) -> list:
+    """Every node of a physical plan (JVM SparkPlan), depth first. Cached
+    relations are leaves: the plan that built a cache is not re-run."""
+    out = [plan]
+    children = plan.children()
+    for i in range(children.size()):
+        out += _plan_nodes(children.apply(i))
+    return out
+
+
+@pytest.mark.parametrize("num_blocks", [None, 3])
+def test_pagerank_superstep_is_co_partitioned(spark, monkeypatch, num_blocks):
+    # A fixture graph far under spark.sql.autoBroadcastJoinThreshold (64 MB):
+    # without the join hint, every superstep would broadcast the cached
+    # edges. With the vertex state co-partitioned with the edge cache, the
+    # message aggregation's Exchange is the only one in a superstep, for the
+    # session's shuffle partition count (None) and for another one (3).
+    plans = {}
+    commit = SuperstepLoop.commit
+
+    def recording_commit(self, state, superstep, *args, **kwargs):
+        plans[superstep] = _plan_nodes(state._jdf.queryExecution().executedPlan())
+        return commit(self, state, superstep, *args, **kwargs)
+
+    monkeypatch.setattr(SuperstepLoop, "commit", recording_commit)
+    pairs = [(i, (i * 7 + 3) % 200) for i in range(200)] + [(i, (i + 1) % 200) for i in range(200)]
+    edges = spark.createDataFrame(
+        [(s, d, 1.0) for s, d in pairs], "src long, dst long, weight double"
+    )
+    res = pagerank(LinkGraph(edges=edges, node_count=200), max_iterations=4, num_blocks=num_blocks)
+    assert res.updates_run == 3
+    for superstep in (1, 2, 3):
+        names = [p.nodeName() for p in plans[superstep]]
+        assert "BroadcastExchange" not in names, names
+        assert names.count("Exchange") == 1, names
+        (join,) = [p for p in plans[superstep] if p.nodeName().endswith("Join")]
+        assert "Exchange" not in [p.nodeName() for p in _plan_nodes(join)], names

@@ -92,3 +92,40 @@ def test_parity_across_parallelism(spark):
         .collect()[0]["m"]
     )
     assert diff < 1e-9
+
+
+def _persistent_rdds_after_gc(spark, at_most: int, timeout_s: float = 60.0) -> int:
+    """Persistent RDD count once Python and JVM garbage is collected. Spark's
+    ContextCleaner unpersists unreachable RDDs asynchronously, so poll until
+    the count is down to ``at_most`` or the timeout passes."""
+    import gc
+    import time
+
+    sc = spark.sparkContext
+    deadline = time.monotonic() + timeout_s
+    while True:
+        gc.collect()
+        sc._jvm.System.gc()
+        n = sc._jsc.getPersistentRDDs().size()
+        if n <= at_most or time.monotonic() > deadline:
+            return n
+        time.sleep(0.5)
+
+
+def test_repeated_jobs_release_cached_state(spark):
+    # Id maps, edge caches and committed superstep state are all cached;
+    # once a job's TranscriptGraph and results are dropped, nothing of it
+    # may stay pinned in the session.
+    t = synthesize_transcripts(spark, 40, seed=5).localCheckpoint()
+    orig = t.select("conv_id", "turn_idx", "text")
+
+    def job() -> None:
+        tg = derive_link_graph(t)
+        res = pagerank(tg.graph, tolerance=1e-6, max_iterations=6)
+        got = join_scores_back(t, tg.turn_ids, res.scores).select("conv_id", "turn_idx", "text")
+        assert got.exceptAll(orig).count() == 0 and orig.exceptAll(got).count() == 0
+
+    before = _persistent_rdds_after_gc(spark, at_most=0, timeout_s=5.0)
+    for _ in range(5):
+        job()
+    assert _persistent_rdds_after_gc(spark, at_most=before) <= before
